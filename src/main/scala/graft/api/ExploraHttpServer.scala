@@ -26,9 +26,11 @@ import org.apache.spark.sql.Row
   *     carries `metric_id`;
   *   - `local=true` → the raw `{key: {count, sum, avg}}` map
   *     (QueryingService.java:258-261, model/Aggregate.java:3-14) —
-  *     here served from the same distributed plan (there is no
-  *     "this instance only" partial state to expose; Spark's shuffle
-  *     replaced scatter-gather, SURVEY §0);
+  *     here served from the same plan as the aggregated answer (there
+  *     is no "this instance only" partial state to expose; one Spark
+  *     query over the shared view replaced scatter-gather, SURVEY §0:
+  *     a single-stage job over a one-split view, an exchange plan
+  *     otherwise — the one-split rule of [[ExploraService]]);
   *   - validation failure → HTTP 400 with
   *     `ErrorMessage{errorMessage, errorCode}` (model/ErrorMessage.java).
   *

@@ -16,7 +16,8 @@ import org.apache.spark.sql.functions._
   *
   * Views are built once per (geoIndex, precision, resolution) and
   * persisted — the in-process analogue of the reference's RocksDB
-  * stores; scatter-gather/metadata/RPC are Spark's shuffle.
+  * stores; scatter-gather/metadata/RPC are Spark's shuffle, or no
+  * exchange at all for a one-split view (see [[ExploraService]]).
   */
 final case class HistoryParams(
     metricId: String,
@@ -48,14 +49,41 @@ final case class SnapshotParams(
   *   partitions at the FILE level (PartitionFilters, asserted in
   *   ExploraServiceSpec) instead of reading the whole view. When None,
   *   views are kept as in-process persisted DataFrames (harness mode).
+  *
+  * One-split rule (disk views): a request over a small view pays
+  * per-job fixed costs, not scan work — a hash-shuffle map stage, the
+  * range-partition sampling job of the `orderBy` and a result stage
+  * cost far more than scanning a few kB. So a view whose whole scan
+  * plans as ONE input partition (Spark's own file-split rule, checked
+  * once per view without a job) is served through `coalesce(1)`:
+  * request filters and partition pruning still push below it into the
+  * scan, and its single output partition already satisfies the
+  * aggregate's and the sort's distributions, so no Exchange is planned
+  * and a request runs as one job of one stage and one task. A view
+  * whose scan has more splits keeps the parallel exchange plan.
+  *
+  * A disk view counts as built only when its `_SUCCESS` job-commit
+  * marker exists; a directory without it (a crashed or interrupted
+  * write) is rebuilt. Concurrent first requests for one view build it
+  * once.
   */
 class ExploraService(
     readings: DataFrame,
     viewStore: Option[String] = None,
     geoPartLen: Int = 2) {
 
+  /** One view, built at most once however many first requests race
+    * for it: `TrieMap.getOrElseUpdate` may run its builder in every
+    * racing thread but keeps only one slot, and the slot's lazy val
+    * runs the build once. A build that throws leaves the slot unbuilt,
+    * so the next request retries it.
+    */
+  private final class ViewSlot(build: => DataFrame) {
+    lazy val df: DataFrame = build
+  }
+
   private val viewCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Int, String), DataFrame]
+    scala.collection.concurrent.TrieMap.empty[(String, Int, String), ViewSlot]
 
   private def geoExpr(geoIndex: String, precision: Int) = geoIndex match {
     // prefix property: substring of a finer key IS the coarser key,
@@ -65,39 +93,50 @@ class ExploraService(
   }
 
   private def view(geoIndex: String, precision: Int, resolution: String): DataFrame =
-    viewCache.getOrElseUpdate(
-      (geoIndex, precision, resolution),
-      viewStore match {
-        case Some(base) =>
-          val spark = readings.sparkSession
-          val path = s"$base/${geoIndex}_p${precision}_$resolution"
-          val p = new org.apache.hadoop.fs.Path(path)
-          val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (!fs.exists(p))
+    viewCache
+      .getOrElseUpdate(
+        (geoIndex, precision, resolution),
+        new ViewSlot(viewStore match {
+          case Some(base) => diskView(base, geoIndex, precision, resolution)
+          case None =>
             ViewBuilder.build(readings, geoExpr(geoIndex, precision), resolution)
-              .withColumn("geo_part", substring(col("geo"), 1, geoPartLen))
-              // cluster rows by (geo, ts) inside each partition so
-              // parquet row-group min/max statistics line up with the
-              // probe predicates: a snapshot probe (geo IN-list + one ts)
-              // or history probe (geo prefix + ts range) then skips
-              // whole row groups, not just whole partitions — the layout
-              // that matters once a geo_part partition holds many
-              // row groups at 100 TB. geo_part LEADS the sort: the
-              // partitioned writer requires ordering by the partition
-              // column, and a sort that doesn't satisfy it as a prefix
-              // gets a SECOND planner-inserted sort on geo_part alone —
-              // wasted work, and a spill-merge there interleaves equal
-              // keys and silently destroys the (geo, ts) clustering
-              .sortWithinPartitions(col("geo_part"), col("geo"), col("ts"))
-              .write
-              .mode("overwrite")
-              .partitionBy("geo_part")
-              .parquet(path)
-          spark.read.parquet(path)
-        case None =>
-          ViewBuilder.build(readings, geoExpr(geoIndex, precision), resolution)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      })
+              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        }))
+      .df
+
+  private def diskView(
+      base: String, geoIndex: String, precision: Int, resolution: String): DataFrame = {
+    val spark = readings.sparkSession
+    val path = s"$base/${geoIndex}_p${precision}_$resolution"
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // the job commit writes _SUCCESS last: without it the directory is
+    // a crashed or interrupted write, which the overwrite replaces
+    if (!fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
+      ViewBuilder.build(readings, geoExpr(geoIndex, precision), resolution)
+        .withColumn("geo_part", substring(col("geo"), 1, geoPartLen))
+        // cluster rows by (geo, ts) inside each partition so
+        // parquet row-group min/max statistics line up with the
+        // probe predicates: a snapshot probe (geo IN-list + one ts)
+        // or history probe (geo prefix + ts range) then skips
+        // whole row groups, not just whole partitions — the layout
+        // that matters once a geo_part partition holds many
+        // row groups at 100 TB. geo_part LEADS the sort: the
+        // partitioned writer requires ordering by the partition
+        // column, and a sort that doesn't satisfy it as a prefix
+        // gets a SECOND planner-inserted sort on geo_part alone —
+        // wasted work, and a spill-merge there interleaves equal
+        // keys and silently destroys the (geo, ts) clustering
+        .sortWithinPartitions(col("geo_part"), col("geo"), col("ts"))
+        .write
+        .mode("overwrite")
+        .partitionBy("geo_part")
+        .parquet(path)
+    val v = spark.read.parquet(path)
+    // one-split rule (class doc): planning the scan's RDD applies the
+    // file-split rule and launches no job
+    if (v.rdd.getNumPartitions == 1) v.coalesce(1) else v
+  }
 
   /** Partition-level pre-filter: geo probe prefixes → `geo_part`
     * predicate (a SUPERSET of the row-level geo predicate, which still

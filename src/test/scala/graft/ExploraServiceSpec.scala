@@ -2,6 +2,7 @@ package graft
 
 import graft.api.{ExploraService, HistoryParams, SnapshotParams}
 import graft.sources.SensorGrid
+import org.apache.spark.sql.functions.{col, substring}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The service facade: same routing as the reference's REST endpoints. */
@@ -133,6 +134,126 @@ class ExploraServiceSpec extends AnyFunSuite {
       .listFiles().count(_.getName.startsWith("geo_part="))
     assert(scans.head.selectedPartitions.partitionCount < allParts,
       s"probe read all $allParts partitions — no pruning")
+  }
+
+  /** Every physical node, through both adaptive layers (AQE wraps the
+    * plan, and its query stages are leaves).
+    */
+  private def nodesOf(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] =
+    p.collect {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        nodesOf(a.executedPlan)
+      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => q +: nodesOf(q.plan)
+      case n => Seq(n)
+    }.flatten
+
+  private def hasExchange(df: org.apache.spark.sql.DataFrame): Boolean =
+    nodesOf(df.queryExecution.executedPlan)
+      .exists(_.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange])
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+    df.collect().map(_.toSeq).sortBy(_.mkString).toSeq
+
+  /** Row equality up to the last bits of a double sum, whose order of
+    * addition follows the plan's partitioning.
+    */
+  private def sameRows(a: Seq[Seq[Any]], b: Seq[Seq[Any]]): Boolean =
+    a.length == b.length && a.zip(b).forall { case (x, y) =>
+      x.length == y.length && x.zip(y).forall {
+        case (p: Double, q: Double) => math.abs(p - q) <= 1e-9 * math.max(1.0, math.abs(p))
+        case (p, q)                 => p == q
+      }
+    }
+
+  test("disk-backed view store: a one-split view answers each request with one job and no Exchange") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-viewstore-1split").toString
+    // readings over a private copy of the events table: the same plan
+    // over the shared path would pick up the in-process services' cached
+    // views (4 partitions each) and write the view as 4 files
+    val copy = java.nio.file.Files.createTempDirectory("graft-events-copy")
+    java.nio.file.Files.copy(
+      java.nio.file.Paths.get(Sf0001, "events.parquet"), copy.resolve("events.parquet"))
+    val readings = SensorGrid.readings(spark, copy.toString).cache()
+    val ts = java.time.Instant.parse("2024-01-15T07:00:00Z").toEpochMilli
+    val (clat, clon) = graft.geo.GeoHash.decode("u1555j")
+    val snap = SnapshotParams(
+      "signup", "count", ts, clat + 0.01, clon - 0.01, clat - 0.01, clon + 0.01,
+      6, "day", geoIndex = "geohashing")
+    val hist = HistoryParams(
+      "click", "avg", gh6, 6, resolution = Some("day"), fromMs = Some(from), toMs = to)
+    def requests(s: ExploraService) = Seq(
+      "history" -> (() => s.history(hist)),
+      "historyFull" -> (() => s.historyFull(hist)),
+      "snapshot" -> (() => s.snapshot(snap)),
+      "snapshotFull" -> (() => s.snapshotFull(snap)))
+
+    // the default geo_part length puts the sf0.001 view in one small file
+    val single = new ExploraService(readings, viewStore = Some(tmp))
+    single.snapshot(snap).collect()
+    assert(new java.io.File(s"$tmp/geohashing_p6_day/geo_part=u1").list()
+      .count(_.startsWith("part-")) === 1, "precondition: the view is one file")
+    val singleRows = requests(single).map { case (name, req) =>
+      req().collect() // builds the view; not counted
+      val df = req()
+      val (rows, events) = withEvents(rowsOf(df))
+      val jobs = events.count(_.isInstanceOf[org.apache.spark.scheduler.SparkListenerJobStart])
+      assert(jobs === 1, s"$name ran $jobs jobs over a one-split view")
+      assert(!hasExchange(df), s"$name planned an Exchange over a one-split view")
+      assert(rows.nonEmpty, s"$name returned no rows")
+      assert(sameRows(rows, rowsOf(requests(svc).toMap.apply(name)())), s"$name differs from in-process")
+      name -> rows
+    }.toMap
+
+    // the same files under a split size far below the file size: the
+    // scan has many splits, so the view keeps the parallel exchange plan
+    val conf = spark.conf
+    val keys = Seq("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+    val saved = keys.map(k => k -> conf.getOption(k))
+    try {
+      keys.foreach(conf.set(_, "1024"))
+      val multi = new ExploraService(readings, viewStore = Some(tmp))
+      requests(multi).foreach { case (name, req) =>
+        val df = req()
+        assert(sameRows(rowsOf(df), singleRows(name)), s"$name: multi-split rows differ")
+        assert(hasExchange(df), s"$name lost its Exchange over a multi-split view")
+      }
+    } finally saved.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None)    => conf.unset(k)
+    }
+  }
+
+  test("disk-backed view store: a view directory without its _SUCCESS marker is rebuilt") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-viewstore-crash").toString
+    val readings = SensorGrid.readings(spark, Sf0001).cache()
+    // what a crashed build leaves: a part file holding part of the view
+    // (every metric but signup) and no job-commit marker
+    val dir = s"$tmp/geohashing_p6_day"
+    graft.operators.ViewBuilder
+      .build(readings.filter(col("metric") =!= "signup"), substring(col("gh12"), 1, 6), "day")
+      .withColumn("geo_part", substring(col("geo"), 1, 2))
+      .coalesce(1)
+      .write
+      .partitionBy("geo_part")
+      .parquet(dir)
+    val marker = new java.io.File(dir, "_SUCCESS")
+    assert(marker.delete())
+
+    val disk = new ExploraService(readings, viewStore = Some(tmp))
+    val ts = java.time.Instant.parse("2024-01-15T07:00:00Z").toEpochMilli
+    val (clat, clon) = graft.geo.GeoHash.decode("u1555j")
+    val snap = SnapshotParams(
+      "signup", "count", ts, clat + 0.01, clon - 0.01, clat - 0.01, clon + 0.01,
+      6, "day", geoIndex = "geohashing")
+    val hist = HistoryParams(
+      "signup", "sum", gh6, 6, resolution = Some("day"), fromMs = Some(from), toMs = to)
+    val memSnap = rowsOf(svc.snapshot(snap))
+    val memHist = rowsOf(svc.history(hist))
+    assert(memSnap.nonEmpty && memHist.nonEmpty)
+    assert(sameRows(rowsOf(disk.snapshot(snap)), memSnap), "snapshot served the crashed write")
+    assert(sameRows(rowsOf(disk.history(hist)), memHist), "history served the crashed write")
+    assert(marker.exists(), "the rebuilt view has no _SUCCESS marker")
   }
 
   test("invalid parameters are rejected before any Spark work") {

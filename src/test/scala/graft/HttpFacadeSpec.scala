@@ -213,6 +213,49 @@ class HttpFacadeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rps > 1.0, f"throughput collapsed: $rps%.2f req/s")
   }
 
+  test("8 concurrent cold GETs for one view at a fresh store: identical 200s, the view written once") {
+    val store = java.nio.file.Files.createTempDirectory("graft-http-cold").toString
+    val svcCold = new ExploraService(SensorGrid.readings(spark, Sf0001), viewStore = Some(store))
+    val serverCold = new ExploraHttpServer(svcCold)
+    val baseCold = s"http://127.0.0.1:${serverCold.start()}"
+    val path =
+      s"/api/airquality/signup/aggregate/avg/snapshot?ts=$snapTsMs" +
+        s"&src=tiles&res=day&gh_precision=6&bbox=51.31,4.31,51.17,4.50"
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      val go = new java.util.concurrent.CountDownLatch(1)
+      val (results, events) = withEvents {
+        val futures = (1 to 8).map { _ =>
+          pool.submit(new java.util.concurrent.Callable[(Int, String)] {
+            def call(): (Int, String) = {
+              go.await()
+              val conn = URI.create(baseCold + path).toURL
+                .openConnection().asInstanceOf[HttpURLConnection]
+              try (conn.getResponseCode,
+                new String(conn.getInputStream.readAllBytes(), StandardCharsets.UTF_8))
+              finally conn.disconnect()
+            }
+          })
+        }
+        go.countDown()
+        futures.map(_.get(180, java.util.concurrent.TimeUnit.SECONDS))
+      }
+      assert(results.forall(_._1 == 200), s"statuses: ${results.map(_._1)}")
+      assert(results.map(_._2).distinct.size === 1, "cold responses differ")
+      assert(mapper.readTree(results.head._2).get("data").size > 0)
+      val writes = events.count {
+        case e: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          e.physicalPlanDescription.contains("InsertIntoHadoopFsRelationCommand") &&
+            e.physicalPlanDescription.contains(s"$store/geohashing_p6_day")
+        case _ => false
+      }
+      assert(writes === 1, s"the view was written $writes times")
+    } finally {
+      pool.shutdown()
+      serverCold.stop()
+    }
+  }
+
   test("concurrent serving from the DISK-backed view store at sf0.1: 200@10, PartitionFilters retained under load") {
     // VERDICT r9 #8: the 200@10 proof above runs on a cached sf0.001
     // frame; this is the PRODUCTION shape — the server answering from

@@ -1,5 +1,11 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.SparkFirehoseListener
+import org.apache.spark.scheduler.{SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all Spark specs (JVM-forked by sbt). */
@@ -31,6 +37,37 @@ object SparkTestBase {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** Runs `body` and returns its result with every listener event posted
+    * while it ran, from any thread. Delivery is asynchronous but in
+    * order, so a sentinel job run after `body` settles the count: once
+    * its start arrives, every earlier event has arrived too.
+    */
+  def withEvents[A](body: => A): (A, Seq[SparkListenerEvent]) = {
+    val sc = spark.sparkContext
+    val sentinel = java.util.UUID.randomUUID().toString
+    val events = new ConcurrentLinkedQueue[SparkListenerEvent]()
+    val drained = new CountDownLatch(1)
+    val listener = new SparkFirehoseListener {
+      override def onEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerJobStart
+            if s.properties != null && s.properties.getProperty("graft.test.sentinel") == sentinel =>
+          drained.countDown()
+        case _ if drained.getCount > 0 => events.add(e)
+        case _                         =>
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.setLocalProperty("graft.test.sentinel", sentinel)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.test.sentinel", null)
+      assert(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain")
+      (out, events.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
   val Sf0001 = "/root/testdata/sf0.001"
   val Sf001 = "/root/testdata/sf0.01"
   val Sf01 = "/root/testdata/sf0.1"

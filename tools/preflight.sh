@@ -4,7 +4,8 @@
 # (round 4 shipped exactly that: a scaladoc `*/` broke the build and no
 # validation ran all round).
 #
-#   tools/preflight.sh          # compile main + tests + entry-count pin
+#   tools/preflight.sh          # compile main + tests + perfbench unit
+#                               #   tests + entry-count pin
 #   tools/preflight.sh --full   # + graft.Verify at sf0.01 replayed in DuckDB
 #   tools/preflight.sh --anchor # + DuckDB anchor vs the 2x bar (needs a
 #                               #   fresh sf0.1 oracle dump + Spark bench;
@@ -13,6 +14,10 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 
 sbt -batch compile Test/compile
+
+# the benchmark's own logic (generators, percentile math, compare
+# verdicts): pure Python, a few seconds
+python3 -m unittest discover -s perfbench -p 'test_*.py'
 
 # Entry-count pin (VERDICT r10 #6: the SURVEY prose entry count drifted
 # from the generated surface two rounds running). The ONE source of
